@@ -3,7 +3,8 @@
 Runs every headline query at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
 line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ...}. SPARK_GRAFT_CPUS defaults to the
+cores this process may use.
 
 Each query is materialized with the `noop` format so the full plan
 (including every output column) executes without sink I/O. The crawl
@@ -54,7 +55,7 @@ def run_crawl_bench(spark, world_kw: dict) -> tuple[float, int]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark(app_name="tvpl-bench", cpus=cpus)
 

@@ -7,8 +7,8 @@ Usage:
   python bench_extra.py all               # time every registered query once
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
-(default 32), BENCH_EXTRA_REPEATS (default 3), BENCH_EXTRA_TAG (plan file
-suffix, default "before").
+(default: the cores this process may use), BENCH_EXTRA_REPEATS (default 3),
+BENCH_EXTRA_TAG (plan file suffix, default "before").
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ def main() -> None:
     mode = sys.argv[1] if len(sys.argv) > 1 else "time"
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     repeats = int(os.environ.get("BENCH_EXTRA_REPEATS", "3"))
     tag = os.environ.get("BENCH_EXTRA_TAG", "before")
     spark = get_spark(app_name="tvpl-bench-extra", cpus=cpus)

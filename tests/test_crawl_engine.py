@@ -1,9 +1,17 @@
 from __future__ import annotations
 
+import threading
+
 import pytest
 
 from thuvienphapluat_crawler_spark.plans import crawl_oracle
-from thuvienphapluat_crawler_spark.plans.frontier import CrawlEngine
+from thuvienphapluat_crawler_spark.plans.frontier import (
+    CHECKPOINT_SCHEMA,
+    CRAWL_LOG_SCHEMA,
+    DOCS_SCHEMA,
+    FRONTIER_SCHEMA,
+    CrawlEngine,
+)
 from thuvienphapluat_crawler_spark.sources import synthetic_web as SW
 
 WORLD = SW.World(n_hosts=4, base_size=60, links_per_page=4, budget_per_host=8, max_epochs=3)
@@ -141,3 +149,120 @@ def test_crawl_twice_is_idempotent(run):
     engine.run()
     assert engine.crawl_log().count() == n_log
     assert engine.seen().count() == n_seen
+
+
+@pytest.mark.parametrize("fail_at", ["checkpoints_stage", "probe_plan"])
+def test_mid_epoch_crash_leaves_manifest_unchanged(spark, tmp_path_factory, run, fail_at):
+    """An epoch fails after its first writes went to the write pool: either
+    the checkpoints write raises once the other writes have landed, or
+    building the bloom-probe plan raises while the early writes run. The
+    manifest stays as it was, no write-pool thread outlives the epoch, and
+    a resumed crawl equals the uninterrupted one."""
+    full, _ = run
+    root = str(tmp_path_factory.mktemp("wh_crash"))
+    engine = CrawlEngine(spark, WORLD, root, n_buckets=4)
+    engine.run(max_epochs=1)
+    before = engine.wh.read_manifest()
+
+    if fail_at == "checkpoints_stage":
+        stage = engine.wh.stage
+        landed = {t: threading.Event() for t in ("crawl_log", "docs", "frontier")}
+
+        def failing_stage(table, epoch, df):
+            if table == "checkpoints":
+                for t, ev in landed.items():
+                    assert ev.wait(timeout=300), f"{t} never landed"
+                raise RuntimeError("injected failure")
+            path = stage(table, epoch, df)
+            landed[table].set()
+            return path
+
+        engine.wh.stage = failing_stage
+    else:
+
+        def failing_probe(up_to_epoch):
+            raise RuntimeError("injected failure")
+
+        engine._bloom_probe_fn = failing_probe
+
+    def pool_threads():
+        return {t for t in threading.enumerate() if t.name.startswith("ThreadPoolExecutor")}
+
+    idle = pool_threads()
+    with pytest.raises(RuntimeError, match="injected failure"):
+        engine.run_epoch(2)
+    assert engine.wh.read_manifest() == before
+    assert pool_threads() <= idle, "write-pool threads outlived the failed epoch"
+
+    resumed = CrawlEngine(spark, WORLD, root, n_buckets=4)
+    resumed.run()
+    assert spark_log_rows(resumed) == spark_log_rows(full)
+    assert {r.canonical_url for r in resumed.seen().collect()} == {
+        r.canonical_url for r in full.seen().collect()
+    }
+
+
+DECLARED_SCHEMAS = {
+    "crawl_log": CRAWL_LOG_SCHEMA,
+    "frontier": FRONTIER_SCHEMA,
+    "docs": DOCS_SCHEMA,
+    "checkpoints": CHECKPOINT_SCHEMA,
+}
+
+
+@pytest.mark.parametrize("table", list(DECLARED_SCHEMAS))
+def test_declared_schema_matches_written(spark, run, table):
+    """Deltas are read with the schema the engine declares; a column that
+    drifted from what the engine writes would read back as nulls. So the
+    declared read must equal the read that infers the schema from the
+    parquet footers, in columns, types and rows."""
+    engine, _ = run
+    declared = engine.wh.read(spark, table, DECLARED_SCHEMAS[table])
+    inferred = engine.wh.read(spark, table)
+    fields = lambda df: [(f.name, f.dataType.simpleString()) for f in df.schema.fields]  # noqa: E731
+    assert fields(declared) == fields(inferred)
+    rows = declared.collect()
+    assert rows and sorted(rows) == sorted(inferred.collect())
+
+
+def _last_job_id(sc, group: str) -> int:
+    """Run a one-task marker job in its own job group; return its job id."""
+    sc.setJobGroup(group, group)
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return max(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_epoch_job_count(spark, tmp_path_factory):
+    """A robots-off epoch submits at most 18 Spark jobs (counted by job id
+    between two marker jobs, so pool-thread jobs are counted too); a
+    re-added count() or schema-inference job fails here."""
+    engine = CrawlEngine(spark, WORLD, str(tmp_path_factory.mktemp("wh_jobs")), n_buckets=4)
+    engine.run(max_epochs=1)
+    sc = spark.sparkContext
+    first = _last_job_id(sc, "epoch-jobs-before")
+    assert engine.run_epoch(2)
+    last = _last_job_id(sc, "epoch-jobs-after")
+    assert last - first - 1 <= 18
+
+
+def test_crawl_without_partition_coalescing(spark, tmp_path_factory, run):
+    """The host_bucket shuffles leave their partition count to AQE; with
+    coalescing off they run at spark.sql.shuffle.partitions and the crawl
+    must not change."""
+    base, _ = run
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        engine = CrawlEngine(spark, WORLD, str(tmp_path_factory.mktemp("wh_nocoalesce")), n_buckets=4)
+        engine.run()
+        log = spark_log_rows(engine)
+        seen = {r.canonical_url for r in engine.seen().collect()}
+    finally:
+        spark.conf.set(key, prev)
+    assert log == spark_log_rows(base)
+    assert seen == {r.canonical_url for r in base.seen().collect()}

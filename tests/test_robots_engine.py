@@ -12,7 +12,7 @@ from __future__ import annotations
 import pytest
 
 from thuvienphapluat_crawler_spark.plans import crawl_oracle
-from thuvienphapluat_crawler_spark.plans.frontier import CrawlEngine
+from thuvienphapluat_crawler_spark.plans.frontier import FRONTIER_SCHEMA, CrawlEngine
 from thuvienphapluat_crawler_spark.sources import synthetic_web as SW
 
 # budget/epochs chosen so the rules BITE: the plain crawl fetches 5 URLs
@@ -76,6 +76,20 @@ def test_robots_lineage_counts_blocked(run):
     lineage = engine.wh.read_manifest().get("lineage", {})
     blocked = [v.get("n_robots_blocked", 0) for v in lineage.values()]
     assert any(b > 0 for b in blocked)
+
+
+def test_robots_blocked_count_equals_tally(run):
+    # n_robots_blocked is observed inside the fetch job; it must equal a
+    # tally over the frontier: every disallowed URL eligible by that epoch
+    # (blocked URLs are never fetched, so they stay pending)
+    engine, _ = run
+    frontier = engine.wh.read(engine.spark, "frontier", FRONTIER_SCHEMA).collect()
+    lineage = engine.wh.read_manifest()["lineage"]
+    epochs = [int(e) for e in lineage if int(e) > 0]
+    assert epochs
+    for e in epochs:
+        want = sum(1 for r in frontier if r.discovered_epoch <= e and not SW.robots_allowed(r.canonical_url))
+        assert lineage[str(e)]["n_robots_blocked"] == want, f"epoch {e}"
 
 
 def test_missing_crawl_delay_falls_back(spark, tmp_path, monkeypatch):

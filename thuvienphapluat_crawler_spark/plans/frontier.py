@@ -20,8 +20,10 @@ checkpoint loop, ocr/ocr_pdf.py:158-195):
       checkpoints += per-bucket metrics;  ONE atomic manifest commit
 
 Scale notes (the 100 TB story):
-  * frontier/seen deltas are written partitioned by host_bucket → epoch
-    reads prune to live buckets; the rank window shuffles on host once.
+  * the host_bucket shuffles take no fixed partition count, so AQE sizes
+    them (and the delta files) from the data; n_buckets only sets the
+    bloom files and checkpoint rows. Deltas are read with their declared
+    schema (no inference job); the rank window shuffles on host once.
   * the seen anti-join keys on url_fp — at 10^10 rows AQE picks
     sort-merge and splits skewed buckets; the bloom prefilter removes
     the vast majority of candidates BEFORE that shuffle (negatives are
@@ -45,7 +47,7 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import urls as U
@@ -63,6 +65,10 @@ CRAWL_LOG_SCHEMA = (
 )
 SPAN_ROW_SCHEMA = "doc_id string, canonical_url string, kind string, text string, media_ref string, offset int"
 OUTLINK_SCHEMA = "out_url string, src_depth int"
+DOCS_SCHEMA = (
+    "doc_id string, canonical_url string, "
+    "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>, epoch int"
+)
 CHECKPOINT_SCHEMA = (
     "partition_id int, epoch int, n_ranked long, n_fetched long, n_ok long, n_error long, "
     "n_attempts long, n_candidates long, n_new long, max_fetch_slot double, lineage string"
@@ -133,7 +139,7 @@ class CrawlEngine:
         fr = self._frontier_cols(raw.withColumn("depth", F.lit(0)), "depth", 0)
         with ThreadPoolExecutor(max_workers=2) as pool:
             futs = [
-                pool.submit(self.wh.stage, "frontier", 0, fr.repartition(self.n_buckets, "host_bucket")),
+                pool.submit(self.wh.stage, "frontier", 0, fr.repartition("host_bucket")),
                 pool.submit(self._bloom_update, fr, 0),
             ]
             for f in futs:
@@ -296,17 +302,17 @@ class CrawlEngine:
 
         pending = frontier.join(log.select("canonical_url"), "canonical_url", "left_anti")
         eligible = pending.filter(F.col("discovered_epoch") <= epoch)
-        n_blocked = 0
+        blocked = None
         if self.robots:
             from ..sources.robots import apply_robots
 
+            blocked = Observation("robots")
             el = apply_robots(
                 eligible.withColumn(
                     "path", F.regexp_extract("canonical_url", r"^[a-z]+://[^/]+(/.*)$", 1)
                 ),
                 self._robots_rules(),
-            ).localCheckpoint()  # 2 consumers: blocked tally + allowed batch
-            n_blocked = el.filter(~F.col("allowed")).count()
+            ).observe(blocked, F.count_if(~F.col("allowed")).alias("n"))
             eligible = (
                 el.filter(F.col("allowed"))
                 .withColumnRenamed("crawl_delay", "robots_delay")
@@ -320,13 +326,19 @@ class CrawlEngine:
             .withColumn("cookie_header", F.coalesce("cookie_header", F.lit("")))
         )
 
-        fetched = batch.groupBy("host").applyInPandas(
-            self._fetch_group_fn(epoch), CRAWL_LOG_SCHEMA
+        # cut lineage (the epoch outputs reuse it); the same job counts the
+        # batch and, in robots mode, the blocked rows upstream of it
+        ranked = Observation("fetch")
+        fetched = (
+            batch.groupBy("host")
+            .applyInPandas(self._fetch_group_fn(epoch), CRAWL_LOG_SCHEMA)
+            .observe(ranked, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint()
         )
-        fetched = fetched.localCheckpoint()  # cut lineage; epoch outputs reuse it
-        n_ranked = fetched.count()  # cheap: already materialized
+        n_ranked = ranked.get["n"]
         if n_ranked == 0:
             return False
+        n_blocked = blocked.get["n"] if blocked else 0
 
         ok = fetched.filter(F.col("status") == "ok")
         if self.content == "html":
@@ -351,13 +363,36 @@ class CrawlEngine:
         # while the main thread drives (b) overlaps their job latencies
         # (Spark schedules concurrent jobs FIFO; back-fill the tail). The
         # manifest commit still happens strictly after ALL writes land, so
-        # atomicity/resume semantics are unchanged.
+        # atomicity/resume semantics are unchanged. Everything after the
+        # first submit sits inside the try: whatever raises, queued writes
+        # are cancelled and running ones joined before the error leaves.
         pool = ThreadPoolExecutor(max_workers=3)
-        early_futs = [
-            pool.submit(wh.stage, "crawl_log", epoch, fetched),
-            pool.submit(wh.stage, "docs", epoch, docs),
-        ]
+        try:
+            futs = [
+                pool.submit(wh.stage, "crawl_log", epoch, fetched),
+                pool.submit(wh.stage, "docs", epoch, docs),
+            ]
+            probed, new_rows = self._discover(ok, frontier, epoch)
+            checkpoints = self._checkpoint_rows(fetched, probed, new_rows, epoch)
+            futs += [
+                pool.submit(wh.stage, "frontier", epoch, new_rows.repartition("host_bucket")),
+                pool.submit(wh.stage, "checkpoints", epoch, checkpoints),
+                pool.submit(self._bloom_update, new_rows, epoch),
+            ]
+            for f in futs:
+                f.result()  # propagate the first failure, never commit partial
+        finally:
+            pool.shutdown(wait=True, cancel_futures=True)
+        wh.commit_epoch(
+            epoch,
+            ["crawl_log", "docs", "frontier", "checkpoints"],
+            lineage={"n_ranked": n_ranked, "n_robots_blocked": n_blocked},
+        )
+        return True
 
+    def _discover(self, ok: DataFrame, frontier: DataFrame, epoch: int) -> tuple[DataFrame, DataFrame]:
+        """Outlinks of the ok pages → (bloom-probed candidates, confirmed-new
+        frontier rows), both localCheckpoint'ed."""
         links = ok.select("canonical_url", "depth").mapInPandas(self._outlinks_fn(), OUTLINK_SCHEMA)
         # one shuffle, not two: frontier columns are per-URL expressions, so
         # compute them BEFORE the exchange, repartition by host_bucket once,
@@ -370,7 +405,7 @@ class CrawlEngine:
         frontier_cols = [f.split()[0] for f in FRONTIER_SCHEMA.split(", ")]
         id_cols = [c for c in frontier_cols if c != "depth"]
         cands = (
-            ann.repartition(self.n_buckets, "host_bucket")
+            ann.repartition("host_bucket")
             .groupBy(*id_cols)
             .agg((F.min("depth") + 1).cast("int").alias("depth"))
             .select(*frontier_cols)
@@ -384,12 +419,13 @@ class CrawlEngine:
             .drop("maybe_seen")
             .join(frontier.select("url_fp"), "url_fp", "left_anti")
         )
-        new_rows = fresh.unionByName(confirmed).localCheckpoint()
+        return probed, fresh.unionByName(confirmed).localCheckpoint()
 
-        # per-bucket lineage + metrics (the distributed progress.json,
-        # ocr/ocr_pdf.py:77-88,179-195)
+    def _checkpoint_rows(self, fetched: DataFrame, probed: DataFrame, new_rows: DataFrame, epoch: int) -> DataFrame:
+        """Per-bucket lineage + metrics (the distributed progress.json,
+        ocr/ocr_pdf.py:77-88,179-195)."""
         lineage = json.dumps(
-            {"epoch": epoch, "bloom_base": epoch - 1, "manifest_epochs": wh.read_manifest()["epochs"]}
+            {"epoch": epoch, "bloom_base": epoch - 1, "manifest_epochs": self.wh.read_manifest()["epochs"]}
         )
         fstats = fetched.groupBy("host_bucket").agg(
             F.count("*").alias("n_fetched"),
@@ -407,7 +443,7 @@ class CrawlEngine:
             .groupBy("host_bucket")
             .agg(F.sum("_c").alias("n_candidates"), F.sum("_n").alias("n_new"))
         )
-        checkpoints = (
+        return (
             fstats.join(cnstats, "host_bucket", "full_outer")
             .select(
                 F.col("host_bucket").alias("partition_id"),
@@ -423,23 +459,6 @@ class CrawlEngine:
                 F.lit(lineage).alias("lineage"),
             )
         )
-
-        try:
-            futs = early_futs + [
-                pool.submit(wh.stage, "frontier", epoch, new_rows.repartition(self.n_buckets, "host_bucket")),
-                pool.submit(wh.stage, "checkpoints", epoch, checkpoints),
-                pool.submit(self._bloom_update, new_rows, epoch),
-            ]
-            for f in futs:
-                f.result()  # propagate the first failure, never commit partial
-        finally:
-            pool.shutdown(wait=True)
-        wh.commit_epoch(
-            epoch,
-            ["crawl_log", "docs", "frontier", "checkpoints"],
-            lineage={"n_ranked": n_ranked, "n_robots_blocked": n_blocked},
-        )
-        return True
 
     def run(self, max_epochs: int | None = None) -> int:
         """Bootstrap if needed, then run epochs until the frontier drains
@@ -468,7 +487,7 @@ class CrawlEngine:
         )
 
     def docs(self) -> DataFrame:
-        return self.wh.read(self.spark, "docs", "doc_id string, canonical_url string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>, epoch int")
+        return self.wh.read(self.spark, "docs", DOCS_SCHEMA)
 
     def checkpoints(self) -> DataFrame:
         return self.wh.read(self.spark, "checkpoints", CHECKPOINT_SCHEMA)

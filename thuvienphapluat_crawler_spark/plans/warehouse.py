@@ -75,10 +75,13 @@ class SnapshotWarehouse:
         os.replace(tmp, self.manifest_path)
 
     def read(self, spark: SparkSession, table: str, schema: str | None = None) -> DataFrame | None:
-        """Union of all COMMITTED deltas of a table (None if none yet)."""
+        """Union of all COMMITTED deltas of a table (None if none yet and
+        no schema). With a schema the deltas are read with it, so no
+        job runs to infer one from the parquet footers."""
         m = self.read_manifest()
         epochs = m["tables"].get(table, [])
         if not epochs:
             return None if schema is None else spark.createDataFrame([], schema)
         paths = [self._delta_dir(table, e) for e in sorted(epochs)]
-        return spark.read.parquet(*paths)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*paths)
